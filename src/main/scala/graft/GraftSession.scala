@@ -30,6 +30,9 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       // engine SQL surface: custom expressions (cosine_similarity, ...)
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // file:// sets permissions in-process instead of forking chmod per
+      // file (GraftLocalFileSystem); an engine constant, not an option
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
 
   def local(cpus: String, appName: String): SparkSession = {
     val s = configure(

@@ -149,14 +149,6 @@ object Extraction {
     FilingIndex.filingIndexV2(s, d)
       .orderBy("cik", "accession_number")
 
-  /** K1+G2 through the correctness gate: extract → union a decoy
-    * SUPERSEDED filing per date (lower filing_seq) → CSV sink (LWW +
-    * one-file-per-date partitioned write) → CSV source read-back. The
-    * oracle is the plain holdings oracle, so the sink must drop every
-    * decoy row and the CSV round trip must preserve every value byte
-    * (commas-in-numbers quoting, null vs value). Explicit read schema
-    * keeps the recovered partition column a STRING (type inference would
-    * make it DATE). */
   private[operators] val holdingsStageBuildCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -178,6 +170,14 @@ object Extraction {
     path
   }
 
+  /** K1+G2 through the correctness gate: extract → union a decoy
+    * SUPERSEDED filing per date (lower filing_seq) → CSV sink (LWW +
+    * one file per date, the reference's `D_NPORT-P_HOLDINGS.csv` names) →
+    * CSV source read-back. The oracle is the plain holdings oracle, so the
+    * sink must drop every decoy row and the CSV round trip must preserve
+    * every value byte (commas-in-numbers quoting, null vs value). The
+    * explicit read schema and the file-name date keep every column a
+    * STRING (type inference would make the date a DATE). */
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
     // real + decoys both read the STAGED extraction (two cheap parquet
     // scans; before staging this re-ran the render+parse kernel — the
@@ -189,14 +189,13 @@ object Extraction {
       .withColumn("issuer", lit("SUPERSEDED"))
       .withColumn("filing_seq", lit(1L))
     val outDir = graft.TempPaths.scratch(s, "csv_roundtrip")
-    graft.sinks.HoldingsCsvSink.write(real.unionByName(decoys), outDir)
+    // the reference's flat layout: its reader lists one directory on the
+    // driver, where one directory per date starts a listing job
+    graft.sinks.HoldingsCsvSink.write(real.unionByName(decoys), outDir, exactFilenames = true)
     // NOT sortedPinned (measured r21: the pin regressed 3.4 → 4.5 s —
     // the freshly-written CSV is page-cache-hot, so the sampler's second
     // read is cheaper than materializing the frame)
-    s.read
-      .option("header", "true")
-      .schema("issuer STRING, shares STRING, value_usd STRING, pct_net_assets STRING, reporting_date STRING")
-      .csv(outDir)
+    graft.sinks.HoldingsCsvSink.readReferenceLayout(s, outDir)
       .select(outCols.map(col): _*)
       .orderBy(outCols.map(col): _*)
   }
@@ -253,29 +252,29 @@ object Extraction {
     val nportCiks = FilingIndex.filingIndex(s, d)
       .select(col("cik").cast("long").as("doc_id")).distinct()
     val fetched = docs.join(broadcast(nportCiks), Seq("doc_id"), "leftsemi")
-    // persisted: the retry-union reads it twice and re-extraction is the
+    // pinned: the retry-union reads it twice and re-extraction is the
     // pipeline's expensive stage — without the pin the kernel ran 4×
     // (the self-union doubled the extract subtree and the ledger join
     // re-executed the double; caught by plan audit). O(holdings) rows.
-    val extracted = fetched.as[(Long, String)]
+    // A pin, not `persist()`: the cache manager holds persisted frames
+    // until unpersisted, a pin is dropped once the query is unreachable.
+    val extracted = graft.QueryDsl.pin(fetched.as[(Long, String)]
       .flatMap { case (id, doc) =>
         NportKernel.extractRows(doc).map(h =>
           (id, h.reporting_date, h.issuer, h.shares, h.value_usd, h.pct_net_assets))
       }
-      .toDF("doc_id", "reporting_date", "issuer", "shares", "value_usd", "pct_net_assets")
-      .persist()
+      .toDF("doc_id", "reporting_date", "issuer", "shares", "value_usd", "pct_net_assets"))
     val keyCols = Seq("doc_id", "reporting_date", "issuer", "shares",
       "value_usd", "pct_net_assets")
     // retry traffic in, exact dedup out — n_copies is the fold ledger.
-    // Persisted too: the ledger and the pack both consume it.
-    val deduped = extracted.unionByName(extracted)
+    // Pinned too: the ledger and the pack both consume it.
+    val deduped = graft.QueryDsl.pin(extracted.unionByName(extracted)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n_copies"))
       .withColumn("quality",
         Seq("issuer", "shares", "value_usd", "pct_net_assets")
           .map(c => when(col(c).isNotNull, 1).otherwise(0))
-          .reduce(_ + _))
-      .persist()
+          .reduce(_ + _)))
     val ledger = deduped.groupBy(col("reporting_date")).agg(
       sum(col("n_copies")).as("n_source_rows"),
       sum(col("n_copies") - 1).as("n_dup_folded"),

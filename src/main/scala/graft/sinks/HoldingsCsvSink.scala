@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,12 +17,18 @@ import org.apache.spark.sql.functions._
   * distributed form of the reference's dict overwrite
   * (`master_df_list[reporting_date] = df`, :28,:158).
   *
-  * Scale: `repartition($"reporting_date")` co-locates each date in one
-  * task, so `partitionBy` emits exactly one file per date and no task
-  * holds more than one open writer per date. The LWW window shuffles on
-  * the same key, so AQE reuses the partitioning. At 100 TB with few dates,
-  * per-date file counts (not this single-file layout) would be the
-  * knob — pass `exactFilenames=false` and let tasks write in parallel.
+  * Two layouts, one write: `repartition($"reporting_date")` co-locates
+  * each date in one task, so `partitionBy` emits exactly one file per date
+  * (the LWW window shuffles on the same key, so AQE reuses the
+  * partitioning).
+  *   - Spark's `reporting_date=D/part-*.csv` (the default) — what other
+  *     Spark jobs read, with the date recovered by partition discovery.
+  *   - The reference's flat `D_NPORT-P_HOLDINGS.csv`
+  *     (`exactFilenames = true`), read back by [[readReferenceLayout]]
+  *     with the date taken from the file name. A flat directory lists on
+  *     the driver; one directory per date starts a parallel listing job
+  *     once the dates exceed
+  *     `spark.sql.sources.parallelPartitionDiscovery.threshold` (32).
   */
 object HoldingsCsvSink {
 
@@ -66,6 +72,20 @@ object HoldingsCsvSink {
     try s.iterator().asScala.toList finally s.close()
   }
 
+  private val ReferenceSuffix = "_NPORT-P_HOLDINGS.csv"
+
+  /** The reference layout under `outDir` as (issuer, shares, value_usd,
+    * pct_net_assets, reporting_date), all strings: the date is the file
+    * name minus `_NPORT-P_HOLDINGS.csv`. Explicit schema, so constructing
+    * the reader runs no inference job. */
+  def readReferenceLayout(s: SparkSession, outDir: String): DataFrame =
+    s.read
+      .option("header", "true")
+      .schema("issuer STRING, shares STRING, value_usd STRING, pct_net_assets STRING")
+      .csv(outDir)
+      .withColumn("reporting_date", regexp_replace(col("_metadata.file_name"),
+        java.util.regex.Pattern.quote(ReferenceSuffix) + "$", ""))
+
   /** `reporting_date=D/part-*.csv` → `D_NPORT-P_HOLDINGS.csv` (single data
     * file per partition guaranteed by the repartition above). */
   def renameToReferenceLayout(outDir: String): Unit = {
@@ -76,7 +96,7 @@ object HoldingsCsvSink {
         val date = dir.getFileName.toString.stripPrefix("reporting_date=")
         val parts = listDir(dir).filter(_.getFileName.toString.endsWith(".csv"))
         require(parts.size == 1, s"expected 1 csv in $dir, found ${parts.size}")
-        Files.move(parts.head, root.resolve(s"${date}_NPORT-P_HOLDINGS.csv"),
+        Files.move(parts.head, root.resolve(date + ReferenceSuffix),
           StandardCopyOption.REPLACE_EXISTING)
         listDir(dir).foreach(Files.delete)
         Files.delete(dir)
