@@ -33,6 +33,14 @@ object GraftSession {
       // file:// sets permissions in-process instead of forking chmod per
       // file (GraftLocalFileSystem); an engine constant, not an option
       .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      // Compiled whole-stage-codegen classes, keyed by generated source.
+      // Spark's default of 100 is below the engine's working set (126
+      // distinct classes for the holdings ops, 178 for the catalog ops), so
+      // a long session evicts in a loop and re-runs Janino on every pass.
+      // 1,024 is over 5x the largest measured set; an entry holds ~20 KB
+      // of live heap. Static conf: read once when CodeGenerator loads, so
+      // it is set here on the builder, never through conf.set.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
 
   def local(cpus: String, appName: String): SparkSession = {
     val s = configure(

@@ -60,24 +60,47 @@ object QueryDsl {
       case _ => !isLocalMaster
     }
 
+  /** Where a reliable pin checkpoints, or why it cannot. Pure so
+    * PinModeSpec can pin the table. Under a local master every path is on
+    * the one node, so an unset `spark.graft.checkpoint.dir` falls back to
+    * `/tmp/graft_checkpoints/<appId>`. On a cluster a node-local dir (unset,
+    * or a `file:` URI) would leave each executor's checkpoint files on its
+    * own disk, where a lost executor takes them along and no other node
+    * can read them — exactly what the reliable pin exists to prevent — so
+    * the pin refuses to run instead. */
+  private[graft] def checkpointDir(configured: Option[String], isLocalMaster: Boolean,
+      appId: String): Either[String, String] =
+    configured.map(_.trim).filter(_.nonEmpty) match {
+      case None if isLocalMaster => Right("/tmp/graft_checkpoints/" + appId)
+      case Some(dir) if isLocalMaster || !dir.toLowerCase(java.util.Locale.ROOT).startsWith("file:") =>
+        Right(dir)
+      case other =>
+        val why = other.fold("is unset")(dir => s"is '$dir', which is node-local")
+        Left(s"a reliable pin on a cluster needs spark.graft.checkpoint.dir on shared " +
+          s"storage (hdfs://, s3a://, ...); it $why")
+    }
+
   /** MODE-AWARE execution pin (r22, r21 verdict item 5): every hot-path
     * pin routes through here. Under `local[*]` this is `localCheckpoint`
     * (executor-local blocks — fastest, and executor loss cannot happen in
     * one JVM). On a cluster it is a reliable `checkpoint` into
-    * `spark.graft.checkpoint.dir` (set it to durable storage in a real
-    * deployment; the default is only a placeholder), which survives
-    * executor loss — the lost-executor-unsafe bare `localCheckpoint` was
-    * the r21 verdict's one scale caveat on the sortedPinned family.
-    * Override with `spark.graft.pin.mode` = `local` | `reliable`. Both
-    * modes materialize the same rows; only fault tolerance differs. */
+    * `spark.graft.checkpoint.dir`, which must name shared storage
+    * ([[checkpointDir]] fails the pin otherwise), and survives executor
+    * loss — the lost-executor-unsafe bare `localCheckpoint` was the r21
+    * verdict's one scale caveat on the sortedPinned family. Override with
+    * `spark.graft.pin.mode` = `local` | `reliable`. Both modes materialize
+    * the same rows; only fault tolerance differs. */
   def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
+    val sc = s.sparkContext
     val mode = s.conf.get("spark.graft.pin.mode", "auto")
-    if (pinReliable(mode, s.sparkContext.isLocal)) {
-      if (s.sparkContext.getCheckpointDir.isEmpty)
-        s.sparkContext.setCheckpointDir(
-          s.conf.get("spark.graft.checkpoint.dir",
-            "/tmp/graft_checkpoints/" + s.sparkContext.applicationId))
+    if (pinReliable(mode, sc.isLocal)) {
+      if (sc.getCheckpointDir.isEmpty)
+        checkpointDir(s.conf.getOption("spark.graft.checkpoint.dir"), sc.isLocal,
+          sc.applicationId) match {
+          case Right(dir) => sc.setCheckpointDir(dir)
+          case Left(why) => throw new IllegalStateException(why)
+        }
       df.checkpoint()
     } else df.localCheckpoint()
   }

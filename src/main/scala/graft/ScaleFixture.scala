@@ -15,6 +15,17 @@ import org.apache.spark.sql.functions._
   * query paths resolve. TIMING ONLY — never an oracle input; the driver's
   * testdata stays untouched. */
 object ScaleFixture {
+  /** Replica `r`'s word suffix in a `k`-way fixture: `r` in base 26 over
+    * [a-z], padded to the width `k` needs, so every replica's suffix is
+    * distinct, pure [a-z] and of one length. For k ≤ 26 it is the single
+    * letter `'a' + r`. */
+  private[graft] def replicaSuffix(r: Int, k: Int): String = {
+    require(0 <= r && r < k, s"replica $r outside 0 until $k")
+    val width = Iterator.from(1).find(w => math.pow(26, w) >= k).get
+    Iterator.iterate(r)(_ / 26).take(width).map(n => ('a' + n % 26).toChar)
+      .toSeq.reverse.mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(src, out, kStr) = args
     val k = kStr.toInt
@@ -27,7 +38,7 @@ object ScaleFixture {
     (0 until k).map { r =>
       if (r == 0) docs
       else {
-        val sfx = lit("zz" + ('a' + r).toChar)
+        val sfx = lit("zz" + replicaSuffix(r, k))
         docs.select(
           (col("doc_id") + lit(r * maxDoc)).as("doc_id"),
           array_join(transform(split(col("text"), " "),

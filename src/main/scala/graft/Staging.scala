@@ -46,7 +46,10 @@ object Staging {
 
   private val buildsLog = new java.util.concurrent.ConcurrentLinkedQueue[BuildRecord]()
 
-  /** Every build that ran in this JVM since the last [[resetBuildLog]]. */
+  /** Every build that ran in this JVM since the last [[resetBuildLog]].
+    * Only builds: a stage found warm on disk (built by an earlier JVM, or
+    * by another process while this one waited on the lock) adds no record,
+    * so a warm run reads an empty log and prices no staging. */
   def buildsSnapshot: Seq[BuildRecord] = {
     import scala.jdk.CollectionConverters._
     buildsLog.iterator().asScala.toVector

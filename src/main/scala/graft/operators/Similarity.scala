@@ -1185,9 +1185,8 @@ object Similarity {
     val rb = s.read.parquet(rbPath)
     // the ingest: delta-only residual + encode, pinned (it feeds a code
     // table the probe scans once per ADC join leg)
-    val dCodes = encodeResiduals(
-        residualsOver(emb(s, d).filter(isDeltaVec), cents), rb)
-      .localCheckpoint()
+    val dCodes = graft.QueryDsl.pin(encodeResiduals(
+        residualsOver(emb(s, d).filter(isDeltaVec), cents), rb))
     require(incIvfPqBuildCount.get() == builds,
       "the ingest must not rebuild the staged base index")
     val codes = s.read.parquet(codesPath)
@@ -1877,7 +1876,7 @@ object Similarity {
     // pinned: the O(delta×M) insert-edge batch feeds THREE union legs of
     // an edge table the probe scans once per beam round — unpinned, the
     // band join + window would re-execute per scan
-    val dEdges = delta.join(baseBands, Seq("band", "bkey"))
+    val dEdges = graft.QueryDsl.pin(delta.join(baseBands, Seq("band", "bkey"))
       .select(col("src"), col("sv_s"), col("dst"), col("sv_d"))
       // dedupe shared-band repeats on the KEY PAIR only: the payload
       // vectors are functions of src/dst, and hashing the long arrays
@@ -1885,8 +1884,7 @@ object Similarity {
       .dropDuplicates("src", "dst")
       .select(col("src"), col("dst"),
         intD2(col("sv_s"), col("sv_d")).as("d2"), col("sv_d"), col("sv_s"))
-      .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM)
-      .localCheckpoint()
+      .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM))
     require(incNswBuildCount.get() == builds,
       "the insert must not rebuild the staged base graph")
     val edges0 = s.read.parquet(e0P).select(col("src"), col("dst"), col("sv_d"))
@@ -2163,7 +2161,7 @@ object Similarity {
     * append ≡ rebuild row-for-row); NOT the production shape: it
     * re-trains nothing but re-assigns every base vector per run. */
   private[operators] def incrementalAnnInline(s: SparkSession, d: String): DataFrame = {
-    val cents = centroidArraysOf(emb(s, d).filter(!isDeltaVec)).localCheckpoint()
+    val cents = graft.QueryDsl.pin(centroidArraysOf(emb(s, d).filter(!isDeltaVec)))
     incAnnProbe(s, d, cents, assignNearest(emb(s, d), cents))
   }
 

@@ -2768,8 +2768,8 @@ object Streams {
     // signature payload — the bands+withSig join used to plan the
     // compute-dense MinHash subtree twice (half the replay's cost at
     // sf0.1 was batch prep, not streaming)
-    val sig = graft.operators.Dedup.withSig(s, d)
-      .select(col("doc_id"), col("sig")).localCheckpoint()
+    val sig = graft.QueryDsl.pin(graft.operators.Dedup.withSig(s, d)
+      .select(col("doc_id"), col("sig")))
     val rows = graft.operators.Dedup.bandsFrom(sig)
       .join(sig.select(col("doc_id"),
         transform(col("sig"), v => coalesce(v, lit(-1L))).as("sigArr")), "doc_id")

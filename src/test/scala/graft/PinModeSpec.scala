@@ -21,6 +21,21 @@ class PinModeSpec extends AnyFunSuite {
     assert(!QueryDsl.pinReliable("local", isLocalMaster = false))
   }
 
+  test("checkpoint dir: a cluster needs shared storage; local may fall back") {
+    assert(QueryDsl.checkpointDir(None, isLocalMaster = true, "app-1") ==
+      Right("/tmp/graft_checkpoints/app-1"))
+    assert(QueryDsl.checkpointDir(Some("file:///data/cp"), isLocalMaster = true, "app-1") ==
+      Right("file:///data/cp"), "one node: a local dir is as reliable as any")
+    assert(QueryDsl.checkpointDir(Some("hdfs://nn/cp"), isLocalMaster = false, "app-1") ==
+      Right("hdfs://nn/cp"))
+    for (dir <- Seq(None, Some(""), Some("file:///tmp/cp"), Some(" FILE:/tmp/cp"))) {
+      val got = QueryDsl.checkpointDir(dir, isLocalMaster = false, "app-1")
+      assert(got.isLeft, s"$dir must not back a reliable pin on a cluster")
+      assert(got.swap.toOption.get.contains("spark.graft.checkpoint.dir"),
+        "the failure must name the setting to fix")
+    }
+  }
+
   test("reliable pin materializes through the checkpoint dir, rows identical") {
     val s = TestSpark.spark
     val df = s.range(0L, 1000L, 1L, 4).toDF("id")
